@@ -5,7 +5,26 @@ package graft.selector
   * see PIP-105). The reference repo itself is empty (README.md:1), so
   * this grammar is derived from the published JMS spec, not from code.
   */
-sealed trait Expr
+sealed trait Expr {
+
+  /** The direct sub-expressions, left to right. */
+  def children: Seq[Expr] = this match {
+    case Not(x)                => Seq(x)
+    case Neg(x)                => Seq(x)
+    case And(l, r)             => Seq(l, r)
+    case Or(l, r)              => Seq(l, r)
+    case Cmp(_, l, r)          => Seq(l, r)
+    case Arith(_, l, r)        => Seq(l, r)
+    case Between(x, lo, hi, _) => Seq(x, lo, hi)
+    case InList(x, _, _)       => Seq(x)
+    case LikeP(x, _, _, _)     => Seq(x)
+    case IsNull(x, _)          => Seq(x)
+    case _                     => Nil
+  }
+
+  /** True when `p` holds for this expression or any sub-expression. */
+  def exists(p: Expr => Boolean): Boolean = p(this) || children.exists(_.exists(p))
+}
 
 final case class Ident(name: String) extends Expr
 final case class StrL(v: String) extends Expr

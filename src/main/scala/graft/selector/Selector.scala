@@ -14,6 +14,18 @@ import org.apache.spark.sql.functions._
   * semantics: AND/OR/NOT, comparisons, BETWEEN/IN/LIKE over NULL operands
   * all yield NULL, and a selector "matches" only when it evaluates to
   * TRUE — exactly Spark's `Dataset.where`.
+  *
+  * A properties-bag value compared with a number, or used in
+  * arithmetic, is coerced with try-cast semantics: a malformed value
+  * (`{"k": "abc"}` against `props.k >= 50`) makes that comparison
+  * UNKNOWN, as JMS §3.8 requires, instead of failing the query under
+  * Spark's ANSI mode.
+  *
+  * Operand evaluation order is the compiler's choice, and no result
+  * depends on it (three-valued AND/OR are commutative). Each AND chain
+  * and each OR chain compiles as one flat list with the operands that
+  * parse the properties bag last, so a false metadata conjunct (or a
+  * true disjunct) short-circuits past the JSON parse.
   */
 object Selector {
 
@@ -23,7 +35,7 @@ object Selector {
   case object KStr extends Kind
   case object KBool extends Kind
   /** A value pulled out of the string→string properties bag: untyped at
-    * compile time; coerced to double when compared against a number. */
+    * compile time; try-cast to double when compared against a number. */
   case object KProp extends Kind
 
   type Resolver = String => (Column, Kind)
@@ -52,7 +64,7 @@ object Selector {
   val events: Resolver = {
     case "JMSTimestamp"      => (unix_millis(col("ts")), KNum)
     case "JMSPriority"       =>
-      (pmod(get_json_object(col("props"), "$.k").cast("long"), lit(10)), KNum)
+      (pmod(get_json_object(col("props"), "$.k").try_cast("long"), lit(10)), KNum)
     case "JMSXDeliveryCount" => (col("delivery_count"), KNum)
     case "JMSType"           => (col("event_type"), KStr)
     case "JMSMessageID"      => (concat(lit("ID:"), col("event_id")), KStr)
@@ -93,7 +105,7 @@ object Selector {
     case "JMSMessageID" =>
       (concat(lit("ID:"), m.getField("event_id")), KStr)
     case "JMSPriority" =>
-      (pmod(get_json_object(m.getField("props"), "$.k").cast("long"),
+      (pmod(get_json_object(m.getField("props"), "$.k").try_cast("long"),
         lit(10)), KNum)
     case "JMSDeliveryMode"  => (lit("PERSISTENT"), KStr)
     case "JMSCorrelationID" => (lit(null).cast("string"), KStr)
@@ -125,7 +137,39 @@ object Selector {
   def compileExpr(e: Expr, resolve: Resolver): Column = typed(e, resolve)._1
 
   private def asNum(c: (Column, Kind)): Column =
-    if (c._2 == KProp) c._1.cast("double") else c._1
+    if (c._2 == KProp) c._1.try_cast("double") else c._1
+
+  /** True when evaluating `e` parses the properties bag: one of its
+    * identifiers is a bag lookup or JMSPriority, which derives from one. */
+  private def probes(e: Expr, r: Resolver): Boolean = e.exists {
+    case Ident(n) => n == "JMSPriority" || r(n)._2 == KProp
+    case _        => false
+  }
+
+  private def divides(e: Expr): Boolean =
+    e.exists { case Arith('/', _, _) => true; case _ => false }
+
+  /** Probe-free operands first, then probe-bearing ones, each in source
+    * order. An operand containing `/` stays where it is and nothing
+    * crosses it, so a guard written before a division still runs first. */
+  private def probesLast(ops: List[Expr], r: Resolver): List[Expr] = {
+    val (seg, rest) = ops.span(!divides(_))
+    val (probing, free) = seg.partition(probes(_, r))
+    free ::: probing ::: (rest match {
+      case d :: more => d :: probesLast(more, r)
+      case Nil       => Nil
+    })
+  }
+
+  private def conjuncts(e: Expr): List[Expr] = e match {
+    case And(l, b) => conjuncts(l) ::: conjuncts(b)
+    case x         => List(x)
+  }
+
+  private def disjuncts(e: Expr): List[Expr] = e match {
+    case Or(l, b) => disjuncts(l) ::: disjuncts(b)
+    case x        => List(x)
+  }
 
   private def typed(e: Expr, r: Resolver): (Column, Kind) = e match {
     case Ident(n)   => r(n)
@@ -152,8 +196,8 @@ object Selector {
       val (rc0, rk) = typed(rr, r)
       // a property compared against a number is coerced numerically
       val (lc, rc) =
-        if (lk == KProp && rk == KNum) (lc0.cast("double"), rc0)
-        else if (rk == KProp && lk == KNum) (lc0, rc0.cast("double"))
+        if (lk == KProp && rk == KNum) (lc0.try_cast("double"), rc0)
+        else if (rk == KProp && lk == KNum) (lc0, rc0.try_cast("double"))
         else (lc0, rc0)
       val c = op match {
         case "="  => lc === rc
@@ -187,7 +231,9 @@ object Selector {
       (if (neg) xc.isNotNull else xc.isNull, KBool)
 
     case Not(x)    => (!typed(x, r)._1, KBool)
-    case And(l, b) => (typed(l, r)._1 && typed(b, r)._1, KBool)
-    case Or(l, b)  => (typed(l, r)._1 || typed(b, r)._1, KBool)
+    case And(_, _) =>
+      (probesLast(conjuncts(e), r).map(typed(_, r)._1).reduceLeft(_ && _), KBool)
+    case Or(_, _) =>
+      (probesLast(disjuncts(e), r).map(typed(_, r)._1).reduceLeft(_ || _), KBool)
   }
 }

@@ -21,69 +21,19 @@ class FunctionsSpec extends AnyFunSuite {
     // one aggregate), JMS ternary logic included: a NULL verdict
     // matches on neither side (coalesce(false) vs filter-keeps-TRUE).
     import graft.selector._
-    import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
-    // WELL-TYPED generation (JMS selectors are typed — the parser
-    // round-trip test admits ill-typed trees, a compiled-comparison
-    // test cannot): numeric and boolean productions are separate.
     // includes every message-derivable JMS header (VERDICT/ADVICE r10:
     // the generator deliberately omitted them, so the property could
     // not catch eventsPacked silently resolving them as null props)
-    val numIdent: Gen[Expr] =
-      Gen.oneOf("value", "event_id", "user_id", "props.k", "JMSPriority")
-        .map(Ident.apply)
-    val strIdent: Gen[Expr] =
-      Gen.oneOf("event_type", "JMSType", "JMSMessageID", "JMSDeliveryMode",
-        "JMSCorrelationID").map(Ident.apply)
-    val numLit: Gen[Expr] = Gen.oneOf(
-      Gen.choose(0L, 400L).map(LongL.apply),
-      Gen.choose(0.0, 400.0).map(d => DoubleL(math.rint(d * 100) / 100)))
-    val strLit: Gen[Expr] =
-      Gen.oneOf("purchase", "click", "error", "sign").map(StrL.apply)
-    def genNum(depth: Int): Gen[Expr] =
-      if (depth <= 0) Gen.oneOf(numIdent, numLit)
-      else Gen.frequency(
-        2 -> numIdent, 2 -> numLit,
-        // no '/': under Spark 4's ANSI default a zero divisor throws,
-        // and random operands reach zero; the '/' compile path is
-        // already oracle-covered by filter_arith
-        3 -> (for { l <- genNum(depth - 1); r <- genNum(depth - 1)
-          op <- Gen.oneOf('+', '-', '*') } yield Arith(op, l, r)),
-        1 -> genNum(depth - 1).map(Neg.apply))
-    def genBool(depth: Int): Gen[Expr] = {
-      val leaf = for { l <- numIdent; r <- numLit
-        op <- Gen.oneOf("=", "<>", "<", "<=", ">", ">=") } yield Cmp(op, l, r)
-      if (depth <= 0) leaf
-      else Gen.frequency(
-        3 -> (for { l <- genNum(depth - 1); r <- genNum(depth - 1)
-          op <- Gen.oneOf("=", "<>", "<", "<=", ">", ">=") } yield Cmp(op, l, r)),
-        2 -> (for { i <- strIdent; s <- strLit
-          op <- Gen.oneOf("=", "<>") } yield Cmp(op, i, s)),
-        1 -> (for { e <- numIdent; lo <- numLit; hi <- numLit
-          n <- Gen.oneOf(true, false) } yield Between(e, lo, hi, n)),
-        1 -> (for { e <- strIdent; n <- Gen.oneOf(true, false) }
-          yield InList(e, List("purchase", "click"), n)),
-        1 -> (for { e <- strIdent; n <- Gen.oneOf(true, false) }
-          yield LikeP(e, "p%", None, n)),
-        1 -> (for { e <- Gen.oneOf(numIdent, strIdent)
-          n <- Gen.oneOf(true, false) } yield IsNull(e, n)),
-        1 -> genBool(depth - 1).map(Not.apply),
-        2 -> (for { l <- genBool(depth - 1); r <- genBool(depth - 1) } yield And(l, r)),
-        2 -> (for { l <- genBool(depth - 1); r <- genBool(depth - 1) } yield Or(l, r)))
-    }
-    val gen = genBool(3)
-    var seed = Seed(1234L)
-    val asts = scala.collection.mutable.ArrayBuffer.empty[Expr]
-    while (asts.size < 80) {
-      gen.apply(Gen.Parameters.default, seed).foreach(asts += _)
-      seed = seed.next
-    }
+    val asts = SelectorSpec.sample(SelectorSpec.typedSelector(
+      Seq("value", "event_id", "user_id", "props.k", "JMSPriority"),
+      Seq("event_type", "JMSType", "JMSMessageID", "JMSDeliveryMode",
+        "JMSCorrelationID")), 1234L, 80)
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("props"))
     val entry = array(struct(col("event_id"), col("user_id"),
       col("event_type"), col("value"), col("props")))
-    val checks = asts.toSeq.zipWithIndex.map { case (ast, i) =>
+    val checks = asts.zipWithIndex.map { case (ast, i) =>
       val row = coalesce(Selector.compileExpr(ast, Selector.events),
         lit(false))
       val packed = size(filter(entry,
@@ -91,7 +41,7 @@ class FunctionsSpec extends AnyFunSuite {
       sum(when(row =!= packed, 1L).otherwise(0L)).as(s"m$i")
     }
     val r = ev.agg(checks.head, checks.tail: _*).head()
-    asts.toSeq.zipWithIndex.foreach { case (ast, i) =>
+    asts.zipWithIndex.foreach { case (ast, i) =>
       assert(r.getLong(i) == 0L,
         s"packed/row divergence on ${r.getLong(i)} rows for: ${Parser.pretty(ast)}")
     }

@@ -137,6 +137,42 @@ class StreamSpec extends AnyFunSuite {
     assertSameRows(streamed, SparkEntry.queries("filter_subscriptions")(spark, dir))
   }
 
+  test("malformed property values are UNKNOWN, not a query failure: batch where and fan-out stream") {
+    // JMS §3.8: a bag value that is not a number makes a numeric
+    // comparison UNKNOWN. Under Spark's ANSI default a plain cast would
+    // fail the whole query on the one poison message instead.
+    import spark.implicits._
+    import graft.selector.Selector.compileEvents
+    implicit val sqlCtx = spark.sqlContext
+    val msgs = Seq(
+      (1L, "purchase", 120.0, """{"k": "95"}"""),
+      (2L, "purchase", 250.0, """{"k": "abc"}"""),
+      (3L, "view", 60.0, """{"k": "abc"}"""),
+      (4L, "error", 150.0, """{"k": "97"}"""))
+    val ev = msgs.toDF("event_id", "event_type", "value", "props")
+    def ids(sel: String) = ev.where(compileEvents(sel)).as[(Long, String, Double, String)]
+      .collect().map(_._1).toSet
+    assert(ids("props.k >= 50") === Set(1L, 4L))
+    assert(ids("NOT (props.k >= 50)") === Set.empty[Long])
+    assert(ids("event_type = 'view' AND props.k >= 50") === Set.empty[Long])
+    assert(ids("props.k * 2 > 100 OR event_type = 'view'") === Set(1L, 3L, 4L))
+    assert(ids("JMSPriority BETWEEN 5 AND 7") === Set(1L, 4L))
+
+    val mem = MemoryStream[(Long, String, Double, String)]
+    mem.addData(msgs)
+    val ckpt = Files.createTempDirectory("graft_ckpt_poison").toString
+    val q = graft.relational.Filters.subscriptionFanOut(
+        mem.toDF().toDF("event_id", "event_type", "value", "props"))
+      .writeStream.outputMode("append").format("memory").queryName("poison_fanout")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val streamed = spark.table("poison_fanout")
+    assert(streamed.select("event_id", "subscription").as[(Long, String)].collect().toSet ===
+      Set(1L -> "vip", 2L -> "bigbuys", 4L -> "alerts"))
+    assertSameRows(streamed, graft.relational.Filters.subscriptionFanOut(ev))
+  }
+
   test("batched-entry filter: stream over packed entries == batch, verdicts are entry-level") {
     // PIP-105 batched-entry fidelity (VERDICT r09 item 2): entries
     // ARRIVE packed at a broker, so the stream source emits the packed
